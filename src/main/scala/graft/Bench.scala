@@ -16,6 +16,56 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
+  private[graft] final case class ScaleResult(sec: Double, triples: Long, hash: Long)
+  private[graft] final case class Pair(rN: ScaleResult, r4N: ScaleResult, eff: Double,
+      cpuCeil: Double, bwCeil: Double, norm: Double)
+
+  /** Writes `pats` to a temp file for the child runs, runs `body` on its path and
+    * deletes the file afterwards, also when `body` throws. */
+  private[graft] def withPatternsFile[T](pats: Seq[graft.model.Pattern])(
+      body: String => T): T = {
+    val p = java.nio.file.Files.createTempFile("graft_bench_patterns", ".bin")
+    try {
+      val out = new java.io.ObjectOutputStream(java.nio.file.Files.newOutputStream(p))
+      try out.writeObject(pats) finally out.close()
+      body(p.toString)
+    } finally java.nio.file.Files.deleteIfExists(p)
+  }
+
+  // headline = the MEDIAN pair's efficiency: max-of-pairs is upward-biased (any
+  // noise that slows only the c4 run inflates eff and max selects exactly those
+  // samples); the median is the unbiased order statistic. All pairs stay visible
+  // in eff_pairs for spread.
+  private def medianPair(pairs: Seq[Pair]): Pair = pairs.sortBy(_.eff).apply(pairs.size / 2)
+
+  /**
+   * The kg/scaling block of the bench line. Keys are unique for any N: the pair
+   * levels are `_c<N>`/`_c<4N>`, the full-width run is `_full` (its core count in
+   * `full_cores`), so 4N = 32 cannot name two runs alike. The normalized headline
+   * is the median of the per-pair eff/ceiling ratios (each ratio pairs same-phase
+   * measurements).
+   */
+  private[graft] def kgJson(kgPages: Int, lowCores: Int, highCores: Int,
+      fullCores: Int, pairs: Seq[Pair], rFull: ScaleResult): String = {
+    val med = medianPair(pairs)
+    val (tN, t4N) = (med.rN.sec, med.r4N.sec)
+    val effNorm = pairs.map(_.norm).sorted.apply(pairs.size / 2)
+    def arr(f: Pair => Double) = pairs.map(p => f"${f(p)}%.3f").mkString("[", ",", "]")
+    val hashesOk = pairs.forall(p => p.rN.hash == p.r4N.hash && p.rN.hash == rFull.hash)
+    f"""{"pages":$kgPages,"triples":${med.r4N.triples},""" +
+      f""""levels":[$lowCores,$highCores,$fullCores],"full_cores":$fullCores,""" +
+      f""""sec_c$lowCores":$tN%.2f,"sec_c$highCores":$t4N%.2f,"sec_full":${rFull.sec}%.2f,""" +
+      f""""docs_per_sec_c$lowCores":${kgPages / tN}%.1f,"docs_per_sec_c$highCores":${kgPages / t4N}%.1f,""" +
+      f""""docs_per_sec_full":${kgPages / rFull.sec}%.1f,""" +
+      f""""triples_per_sec_full":${rFull.triples / rFull.sec}%.1f,""" +
+      f""""scaling_efficiency":${med.eff}%.3f,"eff_pairs":${arr(_.eff)},""" +
+      f""""host_ceilings":${arr(p => math.min(p.cpuCeil, p.bwCeil))},""" +
+      f""""cpu_ceilings":${arr(_.cpuCeil)},""" +
+      f""""membw_ceilings":${arr(_.bwCeil)},"eff_normalized_pairs":${arr(_.norm)},""" +
+      f""""scaling_efficiency_normalized":$effNorm%.3f,""" +
+      f""""hash_equal":$hashesOk}"""
+  }
+
   private def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
@@ -102,26 +152,23 @@ object Bench {
     // throughput.
     val lowCores = sys.env.getOrElse("SPARK_GRAFT_KG_N", "3").toInt
     val highCores = lowCores * 4
-    case class ScaleResult(sec: Double, triples: Long, hash: Long)
+    val fullCores = 32
     // Patterns are learned ONCE here and shipped to every child as a serialized file:
     // learning is untimed either way, but removing the sample-scale learning job from
     // each child's setup narrows the wall-clock gap between a pair's two timed
     // windows — the gap is exactly where a host-phase change poisons the ratio.
-    val patternsPath = {
+    val pats = {
       implicit val s: SparkSession = session(highCores)
       import s.implicits._
       val train = graft.testgen.CorpusGen.pages(200)
-      val pats = graft.pipeline.KGPipeline.run(
+      val learned = graft.pipeline.KGPipeline.run(
         s.createDataset(train.map(_.page)),
         s.createDataset(train.flatMap(graft.testgen.CorpusGen.goldAnnotations)),
         graft.testgen.CorpusGen.gazetteer).finalPatterns
       s.stop()
-      val p = java.nio.file.Files.createTempFile("graft_bench_patterns", ".bin")
-      val out = new java.io.ObjectOutputStream(java.nio.file.Files.newOutputStream(p))
-      try out.writeObject(pats) finally out.close()
-      p.toString
+      learned
     }
-    def childRun(cores: Int, reps: Int = 3): ScaleResult = {
+    def childRun(patternsPath: String, cores: Int, reps: Int): ScaleResult = {
       val java = System.getProperty("java.home") + "/bin/java"
       val addOpens = Seq(
         "java.base/java.lang", "java.base/java.lang.invoke",
@@ -241,47 +288,22 @@ object Bench {
     // efficiencies as far apart as 0.512/0.991 inside one run — with three pairs a
     // single stolen phase drags the median; with five, the median needs three bad
     // phases to move. Wall cost ~2 extra pair windows (~6 min), paid once per round.
-    case class Pair(rN: ScaleResult, r4N: ScaleResult, eff: Double,
-        cpuCeil: Double, bwCeil: Double, norm: Double)
     val nPairs = sys.env.getOrElse("SPARK_GRAFT_KG_PAIRS", "5").toInt
-    val pairs = (1 to nPairs).map { _ =>
-      val rN0 = childRun(lowCores, reps = 2)
-      val r4N0 = childRun(highCores, reps = 5)
-      val eff0 = (rN0.sec / r4N0.sec) / 4.0
-      val cCpu = cpuCeiling()
-      val cBw = bwCeiling()
-      Pair(rN0, r4N0, eff0, cCpu, cBw, math.min(1.0, eff0 / math.min(cCpu, cBw)))
+    // the patterns file lives exactly as long as the child runs that read it
+    val (pairs, rFull) = withPatternsFile(pats) { path =>
+      val ps = (1 to nPairs).map { _ =>
+        val rN0 = childRun(path, lowCores, reps = 2)
+        val r4N0 = childRun(path, highCores, reps = 5)
+        val eff0 = (rN0.sec / r4N0.sec) / 4.0
+        val cCpu = cpuCeiling()
+        val cBw = bwCeiling()
+        Pair(rN0, r4N0, eff0, cCpu, cBw, math.min(1.0, eff0 / math.min(cCpu, cBw)))
+      }
+      (ps, childRun(path, fullCores, reps = 2))
     }
-    // headline = the MEDIAN pair's efficiency: max-of-pairs is upward-biased (any
-    // noise that slows only the c4 run inflates eff and max selects exactly those
-    // samples); the median is the unbiased order statistic. All pairs stay visible
-    // in eff_pairs for spread. The normalized headline is the median of the per-pair
-    // eff/ceiling ratios (each ratio pairs same-phase measurements).
-    val med = pairs.sortBy(_.eff).apply(pairs.size / 2)
-    val (rN, r4N, eff) = (med.rN, med.r4N, med.eff)
-    val effNorm = pairs.map(_.norm).sorted.apply(pairs.size / 2)
-    val rFull = childRun(32, reps = 2)
-    val (tN, t4N) = (rN.sec, r4N.sec)
-    val effPairs = pairs.map(p => f"${p.eff}%.3f").mkString("[", ",", "]")
-    val ceilings = pairs.map(p => f"${math.min(p.cpuCeil, p.bwCeil)}%.3f")
-      .mkString("[", ",", "]")
-    val cpuCeils = pairs.map(p => f"${p.cpuCeil}%.3f").mkString("[", ",", "]")
-    val bwCeils = pairs.map(p => f"${p.bwCeil}%.3f").mkString("[", ",", "]")
-    val norms = pairs.map(p => f"${p.norm}%.3f").mkString("[", ",", "]")
-    val hashesOk = pairs.forall(p => p.rN.hash == p.r4N.hash && p.rN.hash == rFull.hash)
-
-    val total = results.map(_._2).sum + tN + t4N + rFull.sec
-    val kg = f"""{"pages":$kgPages,"triples":${r4N.triples},""" +
-      f""""levels":[$lowCores,$highCores,32],""" +
-      f""""sec_c$lowCores":$tN%.2f,"sec_c$highCores":$t4N%.2f,"sec_c32":${rFull.sec}%.2f,""" +
-      f""""docs_per_sec_c$lowCores":${kgPages / tN}%.1f,"docs_per_sec_c$highCores":${kgPages / t4N}%.1f,""" +
-      f""""docs_per_sec_c32":${kgPages / rFull.sec}%.1f,""" +
-      f""""triples_per_sec_c32":${rFull.triples / rFull.sec}%.1f,""" +
-      f""""scaling_efficiency":$eff%.3f,"eff_pairs":$effPairs,""" +
-      f""""host_ceilings":$ceilings,"cpu_ceilings":$cpuCeils,""" +
-      f""""membw_ceilings":$bwCeils,"eff_normalized_pairs":$norms,""" +
-      f""""scaling_efficiency_normalized":$effNorm%.3f,""" +
-      f""""hash_equal":$hashesOk}"""
+    val med = medianPair(pairs)
+    val total = results.map(_._2).sum + med.rN.sec + med.r4N.sec + rFull.sec
+    val kg = kgJson(kgPages, lowCores, highCores, fullCores, pairs, rFull)
     // Two lines + a file: the full per-query detail (times + plan fingerprints) is
     // large — the driver's artifact keeps only a LOG TAIL, and a single giant line
     // has never fit it (BENCH_r01–r03 all carry parsed=null with the line's head cut

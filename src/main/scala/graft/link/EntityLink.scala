@@ -4,29 +4,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Entity linking: blocking + Jaccard candidate scoring.
+ * Entity linking: exact token-Jaccard candidate edges, plus a blocked embedding
+ * scorer.
  *
  * The scale-first analog of the reference's value-probability dictionary pass and
  * duplicate propagation (/root/reference/src/msa/AutoAnnotateNER.java:2294-2535,
- * src/msa/pipeline/AnnotateDuplicate.java:106-270): distinct surface forms are grouped
- * into blocks by a cheap deterministic key, candidate pairs are generated ONLY within a
- * block (never a global cross join), and pairs at token-Jaccard ≥ τ become link edges
+ * src/msa/pipeline/AnnotateDuplicate.java:106-270): distinct surface forms are
+ * normalized to token sets, and every pair at token-Jaccard ≥ τ becomes a link edge
  * for connected-components canonicalization.
  *
- * Two blocking FAMILIES are unioned (every form lands in one block per family), so a
- * form silently dropped from an over-cap block in one family can still pair through
- * the other:
- *  - `a:` (first alpha char, token count) of the normalized form — cheap, high recall
- *    for near-identical names;
+ * [[candidateEdges]] finds those pairs with the exact prefix-filter join
+ * [[graft.sim.SimJoin.jaccard]] (rarest-token-first prefixes, length filter, exact
+ * verification): never a global cross join, no block key, no cap — so no pair is ever
+ * lost, and the join's candidate/verified counts ride the query as an observed metric.
+ *
+ * [[candidateEdgesEmbedding]] scores by cosine, which has no token prefix to filter
+ * on, so it keeps blocking. Two blocking FAMILIES are unioned (every form lands in
+ * one block per family), so a form dropped from an over-cap block in one family can
+ * still pair through the other:
+ *  - `a:` (first alpha char, token count) of the normalized form;
  *  - `m:` one-permutation MinHash of the token set (the lexicographically minimal
  *    md5-prefix over tokens) — two aliases land together whenever their shared token
- *    happens to be the minimal one, with probability equal to their token Jaccard,
- *    INDEPENDENT of first-char/length agreement.
+ *    happens to be the minimal one, with probability equal to their token Jaccard.
  * A per-block candidate cap (analogous to the reference's per-doc count cap 50,
  * BestPatterns.java:441-443) bounds the quadratic blow-up on mega-blocks — and per
  * the no-silent-caps rule the dropped-per-block counts are LOGGED at call time and
  * exposed relationally via [[blockAudit]]; AQE skew-join splitting handles residual
- * imbalance. Pairs surfacing in both families are deduplicated before scoring output.
+ * imbalance.
  */
 object EntityLink {
 
@@ -44,15 +48,18 @@ object EntityLink {
     concat(lit("a:"), substring(norm, 1, 1), lit(":"), size(toks)),
     concat(lit("m:"), array_min(transform(toks, t => substring(md5(t), 1, 12)))))
 
-  /** Normalized + exploded-by-family blocking relation shared by both scorers. */
-  private def blocked(forms: DataFrame): DataFrame =
+  /** Normalized form (`norm`) and its token set (`toks`); empty forms dropped. */
+  private def normalized(forms: DataFrame): DataFrame =
     forms
       // builtin (codegen) normalization — this runs over every distinct subject form
       // at canonicalization time, so no Scala UDF in the path
       .withColumn("norm", trim(regexp_replace(lower(col("form")), "[^a-z0-9]+", " ")))
       .filter(length(col("norm")) > 0)
       .withColumn("toks", array_distinct(split(col("norm"), " ")))
-      .withColumn("block", explode(blockKeys(col("norm"), col("toks"))))
+
+  /** Normalized + exploded-by-family blocking relation of the embedding scorer. */
+  private def blocked(forms: DataFrame): DataFrame =
+    normalized(forms).withColumn("block", explode(blockKeys(col("norm"), col("toks"))))
 
   /** Per-block cap (mega-entity guard); tie-break on the unique form so colliding
     * normalized forms keep a parallelism-invariant winner set. */
@@ -64,9 +71,10 @@ object EntityLink {
       .filter(col("rn") <= maxBlockSize).drop("rn")
 
   /**
-   * Relational drop audit for the block cap: one row per over-cap (family-tagged)
-   * block with its total form count and how many forms the cap discards — the
-   * queryable face of the no-silent-caps rule.
+   * Relational drop audit for the block cap of [[candidateEdgesEmbedding]] (the only
+   * blocked scorer; [[candidateEdges]] is exact and drops nothing): one row per
+   * over-cap (family-tagged) block with its total form count and how many forms the
+   * cap discards — the queryable face of the no-silent-caps rule.
    */
   def blockAudit(forms: DataFrame, maxBlockSize: Int = 1000): DataFrame =
     blocked(forms.select(col("form")).distinct())
@@ -87,43 +95,34 @@ object EntityLink {
   }
 
   /**
-   * @param forms DataFrame with a single column `form` (distinct surface forms).
-   * @return edges (src, dst) with jaccard ≥ minJaccard, src < dst lexicographically,
-   *         deduplicated across blocking families.
+   * @param forms DataFrame with a single column `form` (surface forms; duplicates ok).
+   * @return edges (src, dst, jaccard) for every pair of distinct forms whose
+   *         normalized token sets have Jaccard ≥ minJaccard, src < dst
+   *         lexicographically; jaccard = inter / (|a| + |b| − inter) in double.
    */
-  def candidateEdges(forms: DataFrame, minJaccard: Double = 0.5,
-      maxBlockSize: Int = 1000, auditDrops: Boolean = true)(
+  def candidateEdges(forms: DataFrame, minJaccard: Double = 0.5)(
       implicit spark: SparkSession): DataFrame = {
-    val normed = blocked(forms.select(col("form")).distinct())
-    if (auditDrops) logDrops("candidateEdges", normed, maxBlockSize)
-    val capped = cap(normed, maxBlockSize)
-    val a = capped.select(col("form").as("src"), col("toks").as("ta"), col("block"))
-    val b = capped.select(col("form").as("dst"), col("toks").as("tb"), col("block"))
-    a.join(b, Seq("block"))
-      .filter(col("src") < col("dst"))
-      .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
-      .withColumn("uni", size(array_union(col("ta"), col("tb"))))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-      .filter(col("jaccard") >= minJaccard)
-      // the same pair may surface through both families — jaccard is a pure function
-      // of the pair, so plain distinct dedupes exactly
-      .select("src", "dst", "jaccard")
-      .distinct()
+    val sets = normalized(forms.select(col("form")).distinct())
+      .select(col("form").as("id"), col("toks"))
+    graft.sim.SimJoin.jaccard(sets, minJaccard)
+      .select(col("id_a").as("src"), col("id_b").as("dst"),
+        (col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
+          .as("jaccard"))
   }
 
   /**
    * Embedding-scored variant (the north rule's "Jaccard/embedding candidate
-   * scoring"): identical blocking over the normalized form, but within-block
-   * candidate pairs are scored by quantized cosine of a per-form embedding instead of
+   * scoring"): the two blocking families over the normalized form, with within-block
+   * candidate pairs scored by quantized cosine of a per-form embedding instead of
    * token Jaccard — linking aliases whose context vectors agree even when the surface
    * tokens don't. Cosine is computed in integer basis points over quantized vectors
    * (same engine-portable formula as [[graft.sim.Similarity.cosineNearDupPairs]]), so
    * edges are bit-identical across engines and parallelism.
    *
-   * Scale shape: identical to [[candidateEdges]] — within-block pairs only (never a
-   * global cross join), mega-blocks capped, the self-join shuffles both sides on the
-   * block key with identical subplans (ReusedExchange computes the quantize pass
-   * once); residual imbalance goes to AQE skew splitting.
+   * Scale shape: within-block pairs only (never a global cross join), mega-blocks
+   * capped, the self-join shuffles both sides on the block key with identical
+   * subplans (ReusedExchange computes the quantize pass once); residual imbalance
+   * goes to AQE skew splitting.
    *
    * @param forms (form: string, vec: array<float>) — one embedding per surface form
    *              (rows beyond the first per form are dropped deterministically).

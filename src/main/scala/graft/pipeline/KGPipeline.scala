@@ -23,7 +23,7 @@ import graft.sink.Materialize
  *         ─ stats: match + precision gates → final patterns (broadcast)
  *         ─ extract: mentions on ALL pages (narrow; patterns broadcast)
  *         ─ triples: sentence-local subject resolution (window argmin)
- *         ─ link + CC: blocking-join edges, large-star/small-star canonicalization
+ *         ─ link + CC: exact Jaccard edges, large-star/small-star canonicalization
  *         ─ materialize: dedup, subject-bucketed partitioned write + checkpoints
  *
  * Total shuffle budget on the big (all-pages) path: one cogroup of the (small)
@@ -141,7 +141,7 @@ object KGPipeline {
       .unionByName(goldTriples)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // 6. canonicalize subjects: blocking-join edges + connected components
+    // 6. canonicalize subjects: exact Jaccard edges + connected components
     val forms = rawTriples.select($"subj".as("form"))
     val edges = EntityLink.candidateEdges(forms, minJaccard = 0.6)
       .select($"src", $"dst")

@@ -152,9 +152,11 @@ final class TripleStore(val root: String, nBuckets: Int = 16)(
 
   /** Incremental append: bucket the delta and publish it as one atomic commit —
     * the continuous-ingest path that fragments buckets over time (each append adds
-    * one entry per touched bucket), which [[compact]] then bin-packs. Dedup holds
-    * within the appended delta (the canonical write path is [[writeResumable]];
-    * cross-commit duplicates are the store's dedup-at-rest concern). */
+    * one entry per touched bucket), which [[compact]] then bin-packs. Raw ingest:
+    * the delta's rows are stored exactly as given, duplicates included — no dedup
+    * within the delta or against earlier commits. The deduplicating write path is
+    * [[writeResumable]]; duplicates that appends bring in are the store's
+    * dedup-at-rest concern. */
   def append(triples: Dataset[Triple]): Long = {
     val bucketed = Materialize.withBucket(triples, nBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -53,35 +53,44 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
     assert(forced === dist)
   }
 
-  test("entity linking blocks + jaccard produce expected edges") {
+  test("entity linking: exact jaccard join produces expected edges") {
     import spark.implicits._
     val forms = Seq("Acme Corp", "acme corp", "Acme Corp Inc", "Globex Systems")
       .toDF("form")
     val edges = EntityLink.candidateEdges(forms, minJaccard = 0.5)(spark)
       .select("src", "dst").as[(String, String)].collect().toSet
-    // family-a block (a:a:2) pair at jaccard 1.0 (also shares the minhash block —
-    // the cross-family duplicate must be deduped to one edge)
+    // identical token sets (jaccard 1.0) — exactly one edge per pair
     assert(edges.count(e => e == (("Acme Corp", "acme corp"))) == 1)
-    // different token count puts "Acme Corp Inc" in another a: block, but its
-    // md5-min token is still "corp" → the minhash family recovers the pair
-    // (jaccard 2/3 ≥ 0.5) that single-family blocking lost
+    // a different token count is no obstacle: jaccard 2/3 ≥ 0.5 links both ways
     assert(edges.contains(("Acme Corp Inc", "acme corp")))
     assert(edges.contains(("Acme Corp", "Acme Corp Inc")))
     assert(!edges.exists(e => e._1.contains("Globex") || e._2.contains("Globex")))
   }
 
-  test("over-cap block: aliases dropped from family a still link via minhash; audit") {
+  test("over-cap fixture: exact join finds the pair the old cap lost") {
     import spark.implicits._
-    // all four forms share family-a block a:z:2; cap=2 keeps only "za aa"/"zb bb"
-    // there — but the two international aliases share md5-min token "international"
-    // (15d7… < md5 of zeta/zulu), so the m: family still pairs them (jaccard 1/3)
+    // 1,100 fillers "z0000 bed".."z1099 bed" fill both blocks of the alias pair
+    // "Zulu Bed"/"zulu bed": the a: block a:z:2 (first char, token count) and the m:
+    // block of "bed" (md5 001cbc…, below every other token here). The pair sorts last
+    // in both, so a 1,000-form cap per block dropped it from both families.
+    val fillers = (0 until 1100).map(i => f"z$i%04d bed")
+    val forms = (fillers ++ Seq("Zulu Bed", "zulu bed")).toDF("form")
+    val audit = EntityLink.blockAudit(forms).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(audit.get("a:z:2").contains(1102L), audit.mkString(","))
+    assert(audit.get("m:001cbc059a40").exists(_ > 1000L), audit.mkString(","))
+    val edges = EntityLink.candidateEdges(forms, minJaccard = 0.6)(spark)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+    // fillers share one token of two (jaccard 1/3): the pair is the only edge
+    assert(edges.toSeq == Seq(("Zulu Bed", "zulu bed", 1.0)), edges.mkString(","))
+  }
+
+  test("blockAudit: embedding scorer's block cap reports its drops") {
+    import spark.implicits._
+    // all four forms share family-a block a:z:2; a cap of 2 discards two of them
+    // there, and the audit names the block and its loss
     val forms = Seq("za aa", "zb bb", "zeta international", "zulu international")
       .toDF("form")
-    val edges = EntityLink.candidateEdges(forms, minJaccard = 0.3, maxBlockSize = 2)(spark)
-      .select("src", "dst").as[(String, String)].collect().toSet
-    assert(edges.contains(("zeta international", "zulu international")),
-      s"minhash family failed to recover the over-cap pair: $edges")
-    // the drop is NOT silent: the audit names the over-cap block and its loss
     val audit = EntityLink.blockAudit(forms, maxBlockSize = 2)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(audit.toSeq == Seq(("a:z:2", 4L, 2L)), audit.mkString(","))

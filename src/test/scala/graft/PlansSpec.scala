@@ -245,6 +245,31 @@ class PlansSpec extends AnyFunSuite with SparkTest {
       s"jaccardPairs computes the shingle postings twice — ReusedExchange lost:\n$ep")
   }
 
+  test("candidateEdges: one prefix-token equi-join, length filter, no block cap") {
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.functions.{col, format_string}
+    // the production linker is the exact prefix-filter join: its ONLY pair generator
+    // is an equi-join on the prefix token, guarded by the length filter; no cross
+    // join and no row_number cap over a block key (the retired capped blocking)
+    val forms = spark.range(200).select(
+      format_string("acme %d corp", col("id") % 50).as("form"))
+    val edges = graft.link.EntityLink.candidateEdges(forms, minJaccard = 0.6)
+    val onPtok = edges.queryExecution.optimizedPlan.collect { case j: Join => j }
+      .filter(_.condition.exists(_.references.exists(_.name == "ptok")))
+    assert(onPtok.size == 1, s"expected one join on the prefix token:\n$onPtok")
+    assert(ExtractEquiJoinKeys.unapply(onPtok.head).exists(_._2.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name } ==
+      Seq("ptok")), s"the prefix-token join is not an equi-join on ptok:\n${onPtok.head}")
+    val p = edges.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"candidateEdges grew an all-pairs join:\n$p")
+    assert(!p.contains("row_number") && !p.contains("block"),
+      s"a capped block key is back in the linker:\n$p")
+    assert("least\\(size_a#\\d+, size_b#\\d+\\)".r.findFirstIn(p).nonEmpty &&
+      "greatest\\(size_a#\\d+, size_b#\\d+\\)".r.findFirstIn(p).nonEmpty,
+      s"the length filter fell out of the plan:\n$p")
+  }
+
   test("q30→q32: the statistics battery shares ONE persisted sentence pass") {
     // q30/q32 execute eagerly at build (detached results) — their cost shape is the
     // shared annotate fixture: building both must create exactly one cache entry

@@ -365,6 +365,17 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(lin.agg(sum("rows_out")).head.getLong(0) === 200L)
   }
 
+  test("TripleStore.append is raw ingest: a delta's duplicate rows are all stored") {
+    import spark.implicits._
+    import graft.sink.TripleStore
+    val ts = new TripleStore(tmpDir() + "/tstore_raw", nBuckets = 2)
+    val t = Triple("s", "p", "o", "https://x/1", 0, 1, 1L, 1.0)
+    ts.append(spark.createDataset(Seq(t, t, t.copy(score = 0.5))))
+    assert(ts.read().count() === 3)
+    ts.append(spark.createDataset(Seq(t)))
+    assert(ts.read().count() === 4, "append deduplicated against an earlier commit")
+  }
+
   test("TripleStore: racing appender + compactor + readers — snapshot isolation, " +
       "CAS conflict, time travel, vacuum") {
     import spark.implicits._
